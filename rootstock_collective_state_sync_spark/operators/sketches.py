@@ -411,7 +411,9 @@ def kmv_bottom_k(
     same window would disable, putting the whole raw stream on the
     wire. With the partial limit, the one corpus-sized term is a
     map-local sort; shuffle bytes stay survivor-sized at any scale,
-    like the map-side combine the removed distinct used to provide."""
+    like the map-side combine the removed distinct used to provide.
+    WindowGroupLimit needs Spark >= 3.5 (plan shape pinned in
+    ``tests/test_sketches.py``)."""
     from pyspark.sql import Window, functions as F
 
     w1 = Window.partitionBy("grp", "_sl").orderBy("h")

@@ -1,8 +1,7 @@
 """Streaming market-basket maintenance: the mergeable count stages of
 :mod:`..operators.basket` driven by Structured Streaming
 ``foreachBatch``, with item counts, pair counts, and the basket total
-kept in one :class:`..sinks.table.VersionedTable` (same
-store/commit/replay contract as :mod:`.kmv` / :mod:`.twap`).
+kept in one store that runs the :mod:`.store_base` lifecycle.
 
 Contract: BASKET-ALIGNED BATCHES — a basket's rows never straddle a
 micro-batch boundary (the order-keyed append-log ingest; the same
@@ -16,10 +15,6 @@ under the order-keyed ingest, so a batch whose min key does not
 strictly exceed the store's high-water key raises
 :class:`.contracts.ArrivalContractError` before any store mutation
 (route late basket fragments through a batch recompute instead).
-
-The sums are NOT idempotent, so fully-applied replays are skipped via
-the :mod:`.replay` batch_id guard; per-batch rendered rules land
-under batch-keyed score paths.
 
 Scale shape: per micro-batch cost is one basket-keyed batch
 aggregation; store state is one row per item + one per co-occurring
@@ -40,10 +35,7 @@ from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
 from rootstock_collective_state_sync_spark.streaming.contracts import (
     check_basket_alignment,
 )
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 # one unified count store: kind 'N' (total baskets), 'I' (item), 'P' (pair)
 STORE_SCHEMA = T.StructType(
@@ -75,17 +67,15 @@ def _batch_counts(baskets: DataFrame) -> DataFrame:
     return items.unionByName(pairs).unionByName(total)
 
 
-def render_rules(
-    store: VersionedTable, min_sup_e6: int, min_conf_e6: int
-) -> DataFrame:
-    """Rules from the store's current counts — identical to the
-    at-rest operator over every basket streamed so far."""
-    s = store.read()
-    n = int(s.filter(F.col("kind") == "N").agg(F.sum("cnt")).collect()[0][0])
-    item_cnt = s.filter(F.col("kind") == "I").select(
+def _rules(counts: DataFrame, min_sup_e6: int, min_conf_e6: int) -> DataFrame:
+    """Association rules from an N/I/P count table."""
+    n = int(
+        counts.filter(F.col("kind") == "N").agg(F.sum("cnt")).collect()[0][0]
+    )
+    item_cnt = counts.filter(F.col("kind") == "I").select(
         F.col("a").alias("item"), "cnt"
     )
-    pair_cnt = s.filter(F.col("kind") == "P").select(
+    pair_cnt = counts.filter(F.col("kind") == "P").select(
         F.col("a").alias("item_a"),
         F.col("b").alias("item_b"),
         F.col("cnt").alias("pair_cnt"),
@@ -93,6 +83,14 @@ def render_rules(
     return assoc_rules_from_counts(
         n, item_cnt, pair_cnt, min_sup_e6, min_conf_e6
     )
+
+
+def render_rules(
+    store: VersionedTable, min_sup_e6: int, min_conf_e6: int
+) -> DataFrame:
+    """Rules from the store's current counts — identical to the
+    at-rest operator over every basket streamed so far."""
+    return _rules(store.read(), min_sup_e6, min_conf_e6)
 
 
 def basket_foreach_batch(
@@ -106,48 +104,19 @@ def basket_foreach_batch(
     rendered rules under ``scores_path``. Batch rows must be distinct
     ``(bk, item)`` pairs of whole baskets."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["kind", "a", "b"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
+    def advance(batch_df, prev, meta):
         baskets = batch_df.select("bk", "item").distinct()
         lo, hi = baskets.agg(F.min("bk"), F.max("bk")).collect()[0]
-        if not created:
-            # loud-fail BEFORE mutating: a straddling basket fragment
-            # would double-count its items (two scalars vs one
-            # manifest integer — control-plane)
-            check_basket_alignment(
-                store.manifest().meta.get("max_bk"), lo, hi, "basket"
-            )
-        prev = store.read().select("kind", "a", "b", "cnt")
+        # loud-fail BEFORE mutating: a straddling basket fragment
+        # would double-count its items (two scalars vs one manifest
+        # integer — control-plane)
+        check_basket_alignment(meta.get("max_bk"), lo, hi, "basket")
         merged = (
             prev.unionByName(_batch_counts(baskets))
             .groupBy("kind", "a", "b")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
-        # render from the merged frame (not a store re-read) so the
-        # scores write precedes the commit, per the replay contract
-        n = int(
-            merged.filter(F.col("kind") == "N").agg(F.sum("cnt")).collect()[0][0]
-        )
-        item_cnt = merged.filter(F.col("kind") == "I").select(
-            F.col("a").alias("item"), "cnt"
-        )
-        pair_cnt = merged.filter(F.col("kind") == "P").select(
-            F.col("a").alias("item_a"),
-            F.col("b").alias("item_b"),
-            F.col("cnt").alias("pair_cnt"),
-        )
-        rules = assoc_rules_from_counts(
-            n, item_cnt, pair_cnt, min_sup_e6, min_conf_e6
-        )
-        write_batch_scores(rules, scores_path, batch_id)
-        store.overwrite(
-            merged, meta={"batch_id": int(batch_id), "max_bk": int(hi)}
-        )
+        rules = _rules(merged, min_sup_e6, min_conf_e6)
+        return merged, [(rules, scores_path)], {"max_bk": int(hi)}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["kind", "a", "b"], advance)

@@ -31,6 +31,10 @@ TWAP:
   (``tests/test_streaming_basket_late.py``: shuffled-arrival-within-
   horizon == at-rest).
 
+The store runs the :mod:`.store_base` lifecycle: late drops and
+rules are its batch-keyed outputs, ``max_bk_seen``/``fin_bk`` its leg
+meta.
+
 Scale shape: finalized state is #items²-bounded as in the strict
 leg; the pending pool is bounded by horizon × basket rate — the same
 bound Structured Streaming's state store carries under a watermark.
@@ -40,16 +44,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from rootstock_collective_state_sync_spark.operators.basket import (
-    assoc_rules_from_counts,
-    basket_item_counts,
-    basket_pair_counts,
-)
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
+from rootstock_collective_state_sync_spark.streaming.basket import (
+    _batch_counts,
+    _rules,
 )
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 # kinds: N (basket total) / I (item) / P (pair) finalized counts,
 # E (pending raw row: a = item, bk set); count rows zero bk
@@ -62,47 +62,17 @@ STORE_SCHEMA = T.StructType(
         T.StructField("cnt", T.LongType(), False),
     ]
 )
+KEYS = ["kind", "a", "b", "bk"]
 
 
 def _count_rows(baskets: DataFrame) -> DataFrame:
     """N/I/P count rows for a FINALIZED basket set (distinct
     (bk, item) rows in)."""
-    n = baskets.select("bk").distinct().count()
-    items = basket_item_counts(baskets).select(
-        F.lit("I").alias("kind"),
-        F.col("item").alias("a"),
-        F.lit("").alias("b"),
-        F.lit(-1).cast("long").alias("bk"),
-        F.col("cnt"),
-    )
-    pairs = basket_pair_counts(baskets).select(
-        F.lit("P").alias("kind"),
-        F.col("item_a").alias("a"),
-        F.col("item_b").alias("b"),
-        F.lit(-1).cast("long").alias("bk"),
-        F.col("pair_cnt").alias("cnt"),
-    )
-    total = baskets.sparkSession.createDataFrame(
-        [("N", "", "", -1, n)], STORE_SCHEMA
-    )
-    return items.unionByName(pairs).unionByName(total)
+    return _batch_counts(baskets).withColumn("bk", F.lit(-1).cast("long"))
 
 
-def _rules(counts: DataFrame, min_sup_e6: int, min_conf_e6: int) -> DataFrame:
-    n = int(
-        counts.filter(F.col("kind") == "N").agg(F.sum("cnt")).collect()[0][0]
-    )
-    item_cnt = counts.filter(F.col("kind") == "I").select(
-        F.col("a").alias("item"), "cnt"
-    )
-    pair_cnt = counts.filter(F.col("kind") == "P").select(
-        F.col("a").alias("item_a"),
-        F.col("b").alias("item_b"),
-        F.col("cnt").alias("pair_cnt"),
-    )
-    return assoc_rules_from_counts(
-        n, item_cnt, pair_cnt, min_sup_e6, min_conf_e6
-    )
+def _sum_counts(df: DataFrame) -> DataFrame:
+    return df.groupBy(*KEYS).agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def basket_late_foreach_batch(
@@ -117,15 +87,7 @@ def basket_late_foreach_batch(
     finalized-counts + pending-pool ``store`` under the watermark
     contract (module docstring). Batch rows: ``(bk, item)``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["kind", "a", "b", "bk"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
-
+    def advance(batch_df, prev, meta):
         base = (
             batch_df.select(
                 F.col("bk").cast("long").alias("bk"), F.col("item")
@@ -133,14 +95,10 @@ def basket_late_foreach_batch(
             .filter(F.col("bk").isNotNull())
             .distinct()
         )
-        prev = store.read()
-        prev_counts = prev.filter(F.col("kind") != "E").select(
-            "kind", "a", "b", "bk", "cnt"
-        )
+        prev_counts = prev.filter(F.col("kind") != "E")
         prev_pend = prev.filter(F.col("kind") == "E").select(
             "bk", F.col("a").alias("item")
         )
-        meta = store.manifest().meta if not created else {}
         prev_fin = meta.get("fin_bk")
         prev_max = meta.get("max_bk_seen")
 
@@ -156,15 +114,14 @@ def basket_late_foreach_batch(
         else:
             late = pool.limit(0)
             live = pool
-        write_batch_scores(late, late_path, batch_id)
 
         batch_max = base.agg(F.max("bk")).collect()[0][0]
         if prev_max is None and batch_max is None:
             # first batch held only NULL-bk rows (filtered above as
             # contract-violating): no watermark can be derived —
-            # ignore the malformed batch instead of raising inside
+            # keep the empty state instead of raising inside
             # foreachBatch and killing the stream (r12 advisor)
-            return
+            return prev, [(late, late_path)], {}
         new_max = max(
             x for x in (prev_max, batch_max) if x is not None
         )
@@ -173,22 +130,10 @@ def basket_late_foreach_batch(
         to_fin = live.filter(F.col("bk") <= F.lit(wm))
         pend = live.filter(F.col("bk") > F.lit(wm))
 
-        merged = (
-            prev_counts.unionByName(_count_rows(to_fin))
-            .groupBy("kind", "a", "b", "bk")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
+        merged = _sum_counts(prev_counts.unionByName(_count_rows(to_fin)))
         # render over finalized ⊕ pending: equals the at-rest pipeline
         # over every non-dropped row (exact once the watermark passes)
-        combined = (
-            merged.unionByName(_count_rows(pend))
-            .groupBy("kind", "a", "b", "bk")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-        )
-        write_batch_scores(
-            _rules(combined, min_sup_e6, min_conf_e6), scores_path, batch_id
-        )
-
+        combined = _sum_counts(merged.unionByName(_count_rows(pend)))
         e_rows = pend.select(
             F.lit("E").alias("kind"),
             F.col("item").alias("a"),
@@ -196,13 +141,13 @@ def basket_late_foreach_batch(
             "bk",
             F.lit(0).cast("long").alias("cnt"),
         )
-        store.overwrite(
+        return (
             merged.unionByName(e_rows),
-            meta={
-                "batch_id": int(batch_id),
-                "max_bk_seen": int(new_max),
-                "fin_bk": int(wm),
-            },
+            [
+                (late, late_path),
+                (_rules(combined, min_sup_e6, min_conf_e6), scores_path),
+            ],
+            {"max_bk_seen": int(new_max), "fin_bk": int(wm)},
         )
 
-    return step
+    return store_step(store, STORE_SCHEMA, KEYS, advance)

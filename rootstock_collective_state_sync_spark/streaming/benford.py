@@ -3,17 +3,12 @@
 
 The digit census is the textbook mergeable summary — counts over
 disjoint row sets ADD EXACTLY — so the store is just the 9-row
-``(digit, n)`` table (:class:`..sinks.table.VersionedTable`, same
-store/commit/replay contract as :mod:`.kmv` / :mod:`.mg`) and the
-rendered report after any prefix of the stream is bit-for-bit the
+``(digit, n)`` table, a :func:`.store_base.sufficient_stat_step`
+keyed sum, and the rendered report after any prefix of the stream is bit-for-bit the
 at-rest audit over the same rows
 (``tests/test_streaming_benford.py``). No arrival contract is needed:
 the census is order-INVARIANT (a pure bag aggregate), unlike the
 TWAP/basket legs.
-
-Replay safety: the merge is not idempotent (sums would double), so
-the :mod:`.replay` batch_id guard gates each batch; per-batch reports
-land under batch-keyed score paths.
 
 Scale shape: per micro-batch one map-side-combined 9-group count;
 store state is 9 rows forever.
@@ -21,16 +16,15 @@ store state is 9 rows forever.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.profile import (
     benford_digit_counts,
     benford_from_counts,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
+from rootstock_collective_state_sync_spark.streaming.store_base import (
+    sufficient_stat_step,
 )
 
 STORE_SCHEMA = T.StructType(
@@ -50,25 +44,11 @@ def benford_foreach_batch(
     """Return the ``foreachBatch`` function merging each batch's digit
     counts into ``store`` and writing the post-merge rendered audit
     under ``scores_path``."""
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["digit"], num_buckets=1
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
-        merged = (
-            store.read()
-            .select("digit", "n")
-            .unionByName(benford_digit_counts(batch_df, value_col, cents))
-            .groupBy("digit")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        write_batch_scores(
-            benford_from_counts(merged), scores_path, batch_id
-        )
-        store.overwrite(merged, meta={"batch_id": int(batch_id)})
-
-    return step
+    return sufficient_stat_step(
+        store,
+        STORE_SCHEMA,
+        ["digit"],
+        lambda batch_df: benford_digit_counts(batch_df, value_col, cents),
+        [(benford_from_counts, scores_path)],
+        num_buckets=1,
+    )

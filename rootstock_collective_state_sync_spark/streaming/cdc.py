@@ -1,14 +1,10 @@
 """Streaming chunk-level dedup: the incremental
 :func:`..operators.text.cdc_dup_increment` driven by Structured
-Streaming ``foreachBatch``, with the chunk-owner store kept in the
-engine's own :class:`..sinks.table.VersionedTable` — the same
-store/commit/replay contract as :mod:`.novelty` (reads see the
-previous committed version; the min-merge is idempotent, so a
-replayed batch converges to the same store state).
+Streaming ``foreachBatch``; the chunk-owner store runs the
+:mod:`.store_base` lifecycle.
 
 Contract: ids are monotone across batches (append-log ingest order).
-Per-batch scores land as parquet appends under ``scores_path``;
-equality with the at-rest :func:`..operators.text.cdc_dup_stats`
+Equality with the at-rest :func:`..operators.text.cdc_dup_stats`
 batch pass is pinned by ``tests/test_streaming_cdc.py``.
 
 Scale shape: per micro-batch cost is batch-sized (the zero-shuffle
@@ -18,14 +14,11 @@ is never re-chunked, and the store never carries text.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.text import cdc_dup_increment
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -44,21 +37,9 @@ def cdc_foreach_batch(
     id_col: str = "doc_id",
 ):
     """Return the ``foreachBatch`` function maintaining ``store`` and
-    appending per-batch chunk-dup scores to ``scores_path``."""
+    writing per-batch chunk-dup scores under ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["chunk_hash"], num_buckets=16
-        )
-        # The min-merge itself converges under replay, but the scores
-        # of a replayed ALREADY-COMMITTED batch would be recomputed
-        # against the post-merge store (docs would collide with their
-        # own chunks) — skip fully-applied replays outright.
-        if not created and batch_already_applied(store, batch_id):
-            return
-        prev = store.read().select("chunk_hash", "first_id")
+    def advance(batch_df, prev, _meta):
         updated, scores = cdc_dup_increment(
             batch_df,
             prev,
@@ -67,10 +48,6 @@ def cdc_foreach_batch(
             id_col=id_col,
             text_col=text_col,
         )
-        # Materialize scores BEFORE the store advances, into a
-        # batch-keyed partition so a replay overwrites its own rows
-        # instead of appending duplicates (:mod:`.replay`).
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(updated, meta={"batch_id": int(batch_id)})
+        return updated, [(scores, scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["chunk_hash"], advance, num_buckets=16)

@@ -6,10 +6,9 @@ Because every partition AND every batch uses the same salted md5 hash
 rows, Count-Min cells merge by EXACT addition under any batch split
 and any batch ORDER — like OHLC (and unlike TWAP/basket), this leg
 needs no arrival contract at all; the stream==batch equality is
-pinned by ``tests/test_streaming_cm.py``. The sums are NOT
-idempotent, so fully-applied replays are skipped via the
-:mod:`.replay` batch_id guard; per-batch point estimates for the
-caller's watchlist land under batch-keyed score paths.
+pinned by ``tests/test_streaming_cm.py``. The store runs the
+:mod:`.store_base` lifecycle; per-batch point estimates for the
+caller's watchlist are its scores.
 
 Scale shape: per batch one Arrow pass per partition builds a
 depth×width integer table; state is exactly depth×width cells —
@@ -20,17 +19,14 @@ collect).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from rootstock_collective_state_sync_spark.operators.sketches import (
     _cm_hash,
     _cm_partition,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -39,6 +35,14 @@ STORE_SCHEMA = T.StructType(
         T.StructField("cnt", T.LongType(), False),
     ]
 )
+
+
+def _estimates(cells: dict, watch: list[str], depth: int, width: int):
+    return [
+        (str(v), int(min(cells.get((r, _cm_hash(str(v), r, width)), 0)
+                         for r in range(depth))))
+        for v in watch
+    ]
 
 
 def render_estimates(
@@ -50,13 +54,7 @@ def render_estimates(
     cells = {
         (r["row"], r["bucket"]): r["cnt"] for r in store.read().collect()
     }
-    out = []
-    for v in watch:
-        est = min(
-            cells.get((r, _cm_hash(str(v), r, width)), 0) for r in range(depth)
-        )
-        out.append((str(v), int(est)))
-    return out
+    return _estimates(cells, watch, depth, width)
 
 
 def cm_foreach_batch(
@@ -71,14 +69,7 @@ def cm_foreach_batch(
     table into ``store`` (exact cell-wise sums) and writing the
     post-merge watchlist estimates under ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["row", "bucket"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
+    def advance(batch_df, prev, _meta):
         batch_cells = (
             batch_df.select(F.col(col).cast("string").alias(col))
             .mapInPandas(
@@ -87,34 +78,19 @@ def cm_foreach_batch(
             )
             .select("row", "bucket", "cnt")
         )
-        prev = store.read().select("row", "bucket", "cnt")
         merged = (
             prev.unionByName(batch_cells)
             .groupBy("row", "bucket")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )
-        spark = batch_df.sparkSession
         cells = {(r["row"], r["bucket"]): r["cnt"] for r in merged.collect()}
-        ests = [
-            (
-                str(v),
-                int(
-                    min(
-                        cells.get((r, _cm_hash(str(v), r, width)), 0)
-                        for r in range(depth)
-                    )
-                ),
-            )
-            for v in watch
-        ]
-        scores = spark.createDataFrame(ests, "item string, est long")
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(
-            spark.createDataFrame(
-                [(k[0], k[1], v) for k, v in sorted(cells.items())],
-                STORE_SCHEMA,
-            ),
-            meta={"batch_id": int(batch_id)},
+        spark = batch_df.sparkSession
+        scores = spark.createDataFrame(
+            _estimates(cells, watch, depth, width), "item string, est long"
         )
+        state = spark.createDataFrame(
+            [(k[0], k[1], v) for k, v in sorted(cells.items())], STORE_SCHEMA
+        )
+        return state, [(scores, scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["row", "bucket"], advance)

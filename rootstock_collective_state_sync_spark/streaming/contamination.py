@@ -19,10 +19,9 @@ bit-for-bit, under any batch split
 (``tests/test_streaming_contamination.py``), like the X-D9/X-D18
 incremental stores.
 
-Replay safety: the per-doc upsert is value-idempotent, but the
-:mod:`.replay` batch_id guard still gates each batch so a replayed
-batch is a structural no-op (no new store version, no duplicate
-score files).
+Replay safety: the same guard and scores-then-store order as the
+:mod:`.store_base` lifecycle, so a replayed batch is a structural
+no-op (no new store version, no duplicate score files).
 
 Scale shape: per micro-batch one shingle explode over the batch only
 (the corpus is never re-scanned), one broadcast join against the
@@ -91,6 +90,7 @@ def contamination_foreach_batch(
     under ``scores_path`` and upserting them into ``flag_store`` (tip
     == at-rest ``benchmark_contamination`` over all rows so far)."""
 
+    # outside store_step: the flagged store takes a keyed upsert, not an overwrite
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -121,21 +121,6 @@ def contamination_foreach_batch(
             # batches, but the replay guard reads the LATEST manifest's
             # batch_id — commit a data-identical manifest carrying it
             # so a replayed clean batch is still a structural no-op
-            from rootstock_collective_state_sync_spark.sinks.table import (
-                Manifest,
-            )
-
-            m = flag_store.manifest()
-            flag_store._commit(
-                Manifest(
-                    version=prev + 1,
-                    schema_json=m.schema_json,
-                    merge_keys=m.merge_keys,
-                    num_buckets=m.num_buckets,
-                    buckets=m.buckets,
-                    meta={**m.meta, "batch_id": int(batch_id)},
-                ),
-                prev,
-            )
+            flag_store.commit_buckets({}, prev, meta={"batch_id": int(batch_id)})
 
     return step

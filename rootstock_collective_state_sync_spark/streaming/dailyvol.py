@@ -14,9 +14,8 @@ at-rest operators (:func:`..plans.analytics.pettitt_from_daily` /
 bit-equal to at-rest over the same rows
 (``tests/test_streaming_dailyvol.py``).
 
-Lifecycle (replay guard, merge law, checkpoint before the two
-renders, scores-then-store ordering) lives in :mod:`.store_base` —
-this module only declares the statistic and the renderers.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined (type, day) count
 aggregate + a keyed merge proportional to the batch's distinct days;

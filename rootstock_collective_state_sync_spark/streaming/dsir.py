@@ -1,14 +1,9 @@
 """Streaming DSIR scoring: the incremental
 :func:`..operators.text.dsir_increment` driven by Structured Streaming
-``foreachBatch``, with the hashed-n-gram model counts kept in the
-engine's own :class:`..sinks.table.VersionedTable` (same recovery
-contract as :mod:`.novelty`: reads see the previous committed version
-and the atomic pointer swing makes a mid-batch crash recoverable).
-Unlike novelty/cdc's idempotent min-merge, the count merge here is a
-plain SUM, so an at-least-once ``foreachBatch`` replay of an
-already-committed batch must be skipped — the step checks the store's
-latest ``batch_id`` meta and no-ops on a fully-applied replay
-(:mod:`.replay`).
+``foreachBatch``; the hashed-n-gram model counts run the
+:mod:`.store_base` lifecycle. The count merge is a plain SUM, so a
+replayed batch would double-count without the lifecycle's replay
+guard.
 
 Scoring is prequential (progressive validation): each micro-batch is
 scored by the model as of its own arrival (post-merge), so early docs
@@ -25,14 +20,11 @@ has streamed through.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.text import dsir_increment
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -52,39 +44,18 @@ def dsir_foreach_batch(
     text_col: str = "text",
 ):
     """Return the ``foreachBatch`` function maintaining the bucket
-    count ``store`` and appending per-batch DSIR scores to
+    count ``store`` and writing per-batch DSIR scores under
     ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["bucket"], num_buckets=4
-        )
-        # foreachBatch is at-least-once and the count merge is a plain
-        # SUM (not idempotent like novelty/cdc's min-merge): a replay
-        # of an already-committed batch must be a no-op, else the model
-        # double-counts and permanently diverges from the at-rest one.
-        if not created and batch_already_applied(store, batch_id):
-            return
-        prev = None if created else store.read().select(
-            "bucket", "c_raw", "c_tgt"
-        )
-        if prev is not None and prev.isEmpty():
-            prev = None
+    def advance(batch_df, prev, _meta):
         updated, scores = dsir_increment(
             batch_df,
-            prev,
+            None if prev.isEmpty() else prev,
             target_col=target_col,
             num_buckets=num_buckets,
             id_col=id_col,
             text_col=text_col,
         )
-        # Materialize scores BEFORE the store advances, into a
-        # batch-keyed partition (overwrite-in-place, so a replay that
-        # crashed between the scores write and the store commit
-        # rewrites identical rows instead of duplicating them).
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(updated, meta={"batch_id": int(batch_id)})
+        return updated, [(scores, scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["bucket"], advance)

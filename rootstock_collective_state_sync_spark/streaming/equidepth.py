@@ -15,9 +15,8 @@ to the at-rest histogram over the same rows
 (``tests/test_streaming_equidepth.py``). Order-invariant (a pure bag
 aggregate) — no arrival contract needed, unlike the TWAP/basket legs.
 
-Lifecycle (input guard, replay guard, merge law, scores-then-store
-ordering) lives in :mod:`.store_base` — this module only declares the
-sufficient statistic and the renderer.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined per-value count;
 store state is |distinct values| rows — the same cardinality the

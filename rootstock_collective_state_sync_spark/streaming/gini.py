@@ -13,10 +13,8 @@ table (:func:`..operators.profile.lorenz_from_counts`), each
 bit-equal to its at-rest raw-row operator over the same rows
 (``tests/test_streaming_gini.py``).
 
-Lifecycle (input guard, replay guard, merge law, checkpoint before
-the two renders, scores-then-store ordering) lives in
-:mod:`.store_base` — this module only declares the statistic and the
-renderers.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined per-value count +
 a keyed merge proportional to the batch's distinct values; store

@@ -1,16 +1,14 @@
 """Streaming KMV distinct-count maintenance: the mergeable bottom-k
 sketch of :mod:`..operators.sketches` driven by Structured Streaming
-``foreachBatch``, with the per-group bottom-k hash table kept in the
-engine's own :class:`..sinks.table.VersionedTable` (same
-store/commit/replay contract as :mod:`.novelty`).
+``foreachBatch``; the per-group bottom-k hash table runs the
+:mod:`.store_base` lifecycle.
 
 The KMV merge law — bottom-k(union of bottom-ks) == bottom-k(union)
 — makes incremental maintenance LOSSLESS for the estimator: after any
 number of micro-batches the store's estimate equals the at-rest
 :func:`..operators.sketches.kmv_estimate` over the full stream
 (pinned by ``tests/test_streaming_kmv.py``). The union-truncate merge
-is idempotent (a set union), so replays converge; the fully-applied
-replay guard + batch-keyed score writes follow :mod:`.replay`.
+is idempotent (a set union), so replays converge.
 
 Scale shape: per micro-batch cost is batch-sized hashing + a merge
 bounded by ``groups x k`` store rows; the store never exceeds
@@ -20,7 +18,7 @@ through — a control-plane table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.sketches import (
     kmv_bottom_k,
@@ -28,10 +26,7 @@ from rootstock_collective_state_sync_spark.operators.sketches import (
     kmv_hashes,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -52,19 +47,9 @@ def kmv_foreach_batch(
     ``store`` and writing per-batch post-merge estimates
     ``(grp, n_hashes, kmv_est)`` under ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["grp", "h"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
+    def advance(batch_df, prev, _meta):
         new_h = kmv_hashes(batch_df, group_col, value_col)
-        prev = store.read().select("grp", "h")
         merged = kmv_bottom_k(prev.unionByName(new_h).distinct(), k)
-        scores = kmv_estimate(merged, k)
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(merged, meta={"batch_id": int(batch_id)})
+        return merged, [(kmv_estimate(merged, k), scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["grp", "h"], advance)

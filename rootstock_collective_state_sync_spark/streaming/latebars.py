@@ -30,11 +30,10 @@ drop-and-log beyond) over the engine's mergeable TWAP partials:
   ``tests/test_streaming_latebars.py``: shuffled-arrival stream ==
   at-rest within the watermark).
 
-Replay safety: the store is ONE VersionedTable overwritten atomically
-under the :mod:`.replay` batch_id guard; the pending-pool update
-dedups on ``(group, id)`` so a replayed half-applied batch rebuilds
-the identical state; scores/late-drops land batch-keyed (overwrite in
-place).
+Replay safety: the store runs the :mod:`.store_base` lifecycle
+(scores and late drops are its batch-keyed outputs, ``max_t_us`` its
+leg meta); the pending-pool update dedups on ``(group, id)`` so a
+replayed half-applied batch rebuilds the identical state.
 
 Scale shape: state is one ``S`` row per group + pending events
 bounded by the lateness horizon × arrival rate (the same bound
@@ -46,7 +45,7 @@ groups-bounded join against ``S``, one window pass over the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from rootstock_collective_state_sync_spark.operators.temporal import (
     twap_merge2,
@@ -54,10 +53,7 @@ from rootstock_collective_state_sync_spark.operators.temporal import (
     twap_render,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 _PARTIAL_COLS = (
     "first_t first_id first_vc last_t last_id last_vc n_events span_us"
@@ -105,17 +101,7 @@ def twap_late_foreach_batch(
     contract (module docstring). Event ids must be unique per group
     (they key the replay dedup)."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            store_schema(group_col),
-            merge_keys=["kind", group_col, "id_"],
-            num_buckets=4,
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
-
+    def advance(batch_df, prev, meta):
         base = batch_df.select(
             F.col(group_col),
             F.col(id_col).cast("long").alias("id_"),
@@ -125,7 +111,6 @@ def twap_late_foreach_batch(
             ).alias("t"),
             F.round(F.col(value_col) * 100).cast("long").alias("vc"),
         )
-        prev = store.read()
         prev_s = prev.filter(F.col("kind") == "S").select(
             group_col, *_PARTIAL_COLS, "vdt"
         )
@@ -148,17 +133,12 @@ def twap_late_foreach_batch(
             (F.col("t") < F.col("_bt"))
             | ((F.col("t") == F.col("_bt")) & (F.col("id_") <= F.col("_bid")))
         )
-        write_batch_scores(
-            j.filter(is_late).select(group_col, "t", "id_", "vc"),
-            late_path,
-            batch_id,
-        )
+        late = j.filter(is_late).select(group_col, "t", "id_", "vc")
         live = j.filter(~is_late).select(group_col, "t", "id_", "vc")
 
-        prev_max_t = store.manifest().meta.get("max_t_us") if not created else None
         batch_max_t = base.agg(F.max("t")).collect()[0][0]
         new_max_t = max(
-            x for x in (prev_max_t, batch_max_t) if x is not None
+            x for x in (meta.get("max_t_us"), batch_max_t) if x is not None
         )
         wm = new_max_t - allowed_lateness_us
 
@@ -170,7 +150,6 @@ def twap_late_foreach_batch(
         full = twap_merge2(
             new_s, twap_partial_from_base(pend, group_col), group_col
         )
-        write_batch_scores(twap_render(full, group_col), scores_path, batch_id)
 
         s_rows = new_s.select(
             F.lit("S").alias("kind"),
@@ -190,9 +169,12 @@ def twap_late_foreach_batch(
             "id_",
             "vc",
         )
-        store.overwrite(
+        return (
             s_rows.unionByName(e_rows),
-            meta={"batch_id": int(batch_id), "max_t_us": int(new_max_t)},
+            [(late, late_path), (twap_render(full, group_col), scores_path)],
+            {"max_t_us": int(new_max_t)},
         )
 
-    return step
+    return store_step(
+        store, store_schema(group_col), ["kind", group_col, "id_"], advance
+    )

@@ -1,8 +1,7 @@
 """Streaming Misra-Gries heavy-hitter maintenance: the mergeable
 m-counter summary of :mod:`..operators.sketches` driven by Structured
-Streaming ``foreachBatch``, with the counter table kept in the
-engine's own :class:`..sinks.table.VersionedTable` (same
-store/commit/replay contract as :mod:`.kmv`).
+Streaming ``foreachBatch``; the counter table runs the
+:mod:`.store_base` lifecycle.
 
 The MG merge law (Agarwal et al. 2012, "Mergeable summaries"): adding
 EXACT batch counts into the summary and then compacting back to m
@@ -13,10 +12,6 @@ accumulates every compaction's subtraction (persisted in the store's
 commit meta). Heavy items keep their no-false-negative guarantee:
 anything with true frequency > N/(m+1) survives every compaction.
 
-Replay safety: the merge itself is NOT idempotent (counts would
-double), so the fully-applied guard of :mod:`.replay` gates each
-batch; per-batch score snapshots go to batch-keyed paths.
-
 Scale shape: per micro-batch cost is one map-side-combined batch
 count + a merge over ``m`` store rows; the store never exceeds ``m``
 counters no matter how much data has streamed through.
@@ -24,13 +19,10 @@ counters no matter how much data has streamed through.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -52,16 +44,8 @@ def mg_foreach_batch(
     accumulated compaction debt rides in the commit meta as
     ``delta``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["item"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
-        delta = 0 if created else int(store.manifest().meta.get("delta", 0))
-
+    def advance(batch_df, prev, meta):
+        delta = int(meta.get("delta", 0))
         batch_counts = (
             batch_df.select(F.col(value_col).cast("string").alias("item"))
             .groupBy("item")
@@ -70,10 +54,7 @@ def mg_foreach_batch(
         # merged counter table: m store rows + batch vocabulary —
         # batch-bounded; collect is the same control-plane policy as
         # the at-rest heavy_hitters merge
-        merged: dict[str, int] = {
-            r["item"]: int(r["est"])
-            for r in store.read().select("item", "est").collect()
-        }
+        merged: dict[str, int] = {r["item"]: int(r["est"]) for r in prev.collect()}
         for r in batch_counts.collect():
             merged[r["item"]] = merged.get(r["item"], 0) + int(r["est"])
         if len(merged) > m:
@@ -81,21 +62,13 @@ def mg_foreach_batch(
             delta += cut
             merged = {k: v - cut for k, v in merged.items() if v > cut}
 
+        ranked = sorted(merged.items(), key=lambda kv: (-kv[1], kv[0]))
         spark = batch_df.sparkSession
-        out = spark.createDataFrame(
-            sorted(merged.items(), key=lambda kv: (-kv[1], kv[0])),
-            STORE_SCHEMA,
-        )
         scores = spark.createDataFrame(
-            [
-                (item, est, est + delta, i + 1)
-                for i, (item, est) in enumerate(
-                    sorted(merged.items(), key=lambda kv: (-kv[1], kv[0]))
-                )
-            ],
+            [(item, est, est + delta, i + 1) for i, (item, est) in enumerate(ranked)],
             "item string, est long, est_upper long, rk int",
         )
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(out, meta={"batch_id": int(batch_id), "delta": delta})
+        state = spark.createDataFrame(ranked, STORE_SCHEMA)
+        return state, [(scores, scores_path)], {"delta": delta}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["item"], advance)

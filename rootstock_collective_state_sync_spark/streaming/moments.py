@@ -15,11 +15,8 @@ the at-rest operators over the same rows
 (``tests/test_streaming_moments.py``). NULL values are filtered at
 ingest (the shared policy).
 
-Lifecycle (input guard, replay guard, merge law — keyed sums cast
-back to the DECLARED store types, so the decimal moments stay exact —
-checkpoint before the fan-out, scores-then-store ordering) lives in
-:mod:`.store_base`; this module only declares the statistic and the
-renderers.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined per-group moment
 aggregate + a keyed merge proportional to the batch's group count;

@@ -1,16 +1,10 @@
 """Streaming crawl-novelty scoring: the incremental
 :func:`..operators.dedup.ngram_novelty_incremental` driven by
-Structured Streaming ``foreachBatch``, with the gram-owner store kept
-in the engine's own :class:`..sinks.table.VersionedTable` — reads see
-the previous committed version while the new one is written, and the
-atomic pointer swing makes a mid-batch crash recoverable (the next
-attempt re-reads the last committed store; the min-merge is
-idempotent, so re-scoring a replayed batch converges to the same
-store state).
+Structured Streaming ``foreachBatch``; the gram-owner store runs the
+:mod:`.store_base` lifecycle.
 
 Contract (same as the batch op): ids are monotone across batches —
-the append-log ingest order. Scores for each batch land as parquet
-appends under ``scores_path``; equality with the at-rest batch pass
+the append-log ingest order. Equality with the at-rest batch pass
 is pinned by ``tests/test_streaming_novelty.py``.
 
 Scale shape: per micro-batch cost is batch-sized + one store
@@ -20,16 +14,13 @@ min-merge; the corpus is never re-scanned, and the store carries
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.dedup import (
     ngram_novelty_incremental,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -47,27 +38,12 @@ def novelty_foreach_batch(
     n: int = 3,
 ):
     """Return the ``foreachBatch`` function maintaining ``store`` and
-    appending per-batch novelty scores to ``scores_path``."""
+    writing per-batch novelty scores under ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["gram_hash"], num_buckets=16
-        )
-        # Skip fully-applied replays: the min-merge converges, but a
-        # replayed batch re-scored against the post-merge store would
-        # see its own grams as stale and mis-score (:mod:`.replay`).
-        if not created and batch_already_applied(store, batch_id):
-            return
-        prev = store.read().select("gram_hash", "first_id")
+    def advance(batch_df, prev, _meta):
         updated, scores = ngram_novelty_incremental(
             batch_df, prev, text_col=text_col, id_col=id_col, n=n
         )
-        # Materialize scores BEFORE the store advances, into a
-        # batch-keyed partition so a replay overwrites its own rows
-        # instead of appending duplicates (:mod:`.replay`).
-        write_batch_scores(scores, scores_path, batch_id)
-        store.overwrite(updated, meta={"batch_id": int(batch_id)})
+        return updated, [(scores, scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["gram_hash"], advance, num_buckets=16)

@@ -1,9 +1,8 @@
 """Streaming OHLC bar maintenance: the mergeable
 :func:`..operators.temporal.ohlc_partial` aggregate driven by
 Structured Streaming ``foreachBatch``, with the per-(key, bucket)
-partial bars kept in the engine's own
-:class:`..sinks.table.VersionedTable` (the :mod:`.novelty`
-store/commit/replay contract).
+partial bars kept in a store that runs the :mod:`.store_base`
+lifecycle.
 
 Every OHLC accumulator is associative and commutative — struct-min /
 struct-max on the (ts, id)-coordinated open/close picks, min/max on
@@ -12,10 +11,7 @@ partials into the store with :func:`..operators.temporal.ohlc_merge`
 reproduces the at-rest bars EXACTLY, regardless of how events split
 across batches AND regardless of batch ORDER: unlike the TWAP and
 basket legs, this leg needs no arrival contract at all (pinned by the
-shuffled-arrival e2e in ``tests/test_streaming_ohlc.py``). The
-count/volume sums are NOT idempotent, so fully-applied replays are
-skipped via the :mod:`.replay` batch_id guard; per-batch rendered
-bars land under batch-keyed score paths.
+shuffled-arrival e2e in ``tests/test_streaming_ohlc.py``).
 
 What order-freedom does NOT give consumers is bar FINALITY: with
 unbounded lateness an already-emitted bar may be revised by any
@@ -47,10 +43,7 @@ from rootstock_collective_state_sync_spark.operators.temporal import (
     ohlc_render,
 )
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 
 def store_schema(key_col: str = "event_type") -> T.StructType:
@@ -118,54 +111,30 @@ def ohlc_foreach_batch(
             "allowed_lateness_us and late_path must be set together"
         )
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            store_schema(key_col), merge_keys=[key_col, "bar_ts"], num_buckets=4
-        )
-        # count/volume sums double under replay — skip applied batches
-        if not created and batch_already_applied(store, batch_id):
-            return
-
-        meta: dict = {"batch_id": int(batch_id)}
-        if allowed_lateness_us is None:
-            accepted = batch_df
-        else:
+    def advance(batch_df, prev, meta):
+        outputs, leg_meta = [], {}
+        accepted = batch_df
+        if allowed_lateness_us is not None:
             tagged = _with_t_and_bar_end(batch_df, ts_col, bar)
-            prev_max_t = (
-                store.manifest().meta.get("max_t_us") if not created else None
-            )
-            wm_prev = (
-                prev_max_t - allowed_lateness_us
-                if prev_max_t is not None
-                else None
-            )
-            if wm_prev is None:
-                late = tagged.filter(F.lit(False))
+            prev_max_t = meta.get("max_t_us")
+            if prev_max_t is None:
+                late, accepted = tagged.filter(F.lit(False)), tagged
             else:
-                late = tagged.filter(F.col("bar_end_us") <= F.lit(wm_prev))
-            write_batch_scores(
-                late.drop("t", "bar_end_us"), late_path, batch_id
-            )
-            accepted = (
-                tagged
-                if wm_prev is None
-                else tagged.filter(F.col("bar_end_us") > F.lit(wm_prev))
-            )
+                end = F.col("bar_end_us")
+                wm_prev = F.lit(prev_max_t - allowed_lateness_us)
+                late = tagged.filter(end <= wm_prev)
+                accepted = tagged.filter(end > wm_prev)
+            outputs.append((late.drop("t", "bar_end_us"), late_path))
             batch_max_t = accepted.agg(F.max("t")).collect()[0][0]
-            new_max_t = max(
-                x for x in (prev_max_t, batch_max_t) if x is not None
-            ) if (prev_max_t is not None or batch_max_t is not None) else None
-            meta["max_t_us"] = int(new_max_t) if new_max_t is not None else None
+            maxes = [x for x in (prev_max_t, batch_max_t) if x is not None]
+            leg_meta["max_t_us"] = int(max(maxes)) if maxes else None
             accepted = accepted.drop("t", "bar_end_us")
 
         new_p = ohlc_partial(accepted, key_col, ts_col, value_col, id_col, bar)
-        prev = store.read().select(*[f.name for f in store_schema(key_col)])
         merged = ohlc_merge(prev.unionByName(new_p), key_col)
         rendered = ohlc_render(merged)
-        if allowed_lateness_us is not None and meta.get("max_t_us") is not None:
-            wm_new = meta["max_t_us"] - allowed_lateness_us
+        if leg_meta.get("max_t_us") is not None:
+            wm_new = leg_meta["max_t_us"] - allowed_lateness_us
             rendered = rendered.withColumn(
                 "is_final",
                 F.expr(
@@ -175,7 +144,7 @@ def ohlc_foreach_batch(
                 )
                 <= F.lit(wm_new),
             )
-        write_batch_scores(rendered, scores_path, batch_id)
-        store.overwrite(merged, meta=meta)
+        outputs.append((rendered, scores_path))
+        return merged, outputs, leg_meta
 
-    return step
+    return store_step(store, store_schema(key_col), [key_col, "bar_ts"], advance)

@@ -15,10 +15,8 @@ the at-rest raw-row operators over the same rows
 (``tests/test_streaming_rankcorr.py``). NULL x/y rows are filtered at
 ingest, matching the at-rest operators' shared NULL policy.
 
-Lifecycle (input guard, replay guard, merge law, checkpoint before
-the two renders, scores-then-store ordering) lives in
-:mod:`.store_base` — this module only declares the statistic and the
-renderers.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined pair count + a
 keyed merge proportional to the batch's distinct pairs; store state

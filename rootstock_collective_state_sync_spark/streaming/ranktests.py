@@ -13,10 +13,8 @@ operators over the same rows (``tests/test_streaming_ranktests.py``).
 The use case is the online experiment monitor: an A/B split's rank
 statistics re-rendered per micro-batch without re-scanning history.
 
-Lifecycle (input guard, replay guard, merge law, checkpoint before
-the fan-out, scores-then-store ordering) lives in :mod:`.store_base`
-— this module only declares the sufficient statistic and the seven
-renderers.
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one map-side-combined per-value count
 over the batch only; store state is |distinct values| rows,

@@ -1,18 +1,17 @@
-"""Replay idempotency for ``foreachBatch`` store-maintenance legs.
+"""Replay idempotency helpers for the ``foreachBatch`` store lifecycle.
 
 Structured Streaming's ``foreachBatch`` contract is at-least-once: a
 crash between the side-effect and the streaming offset commit replays
 the SAME batch (same ``batch_id``) on restart. Two hazards follow for
-the incremental stores (:mod:`.novelty`, :mod:`.cdc`, :mod:`.dsir`):
+an incremental store:
 
-1. **Store double-merge.** The min-merge stores (novelty/cdc) converge
-   under replay, but DSIR's count merge is a plain sum — a replayed
-   batch would double-count into the model, permanently diverging from
-   the at-rest model. Guard: every step writes ``batch_id`` into the
-   :class:`..sinks.table.VersionedTable` manifest meta and SKIPS when
-   the latest committed meta already carries it.  ``foreachBatch``
-   only ever replays the most recent batch, so equality with the last
-   applied id is a complete check.
+1. **Store double-merge.** A sum merge would double-count a replayed
+   batch, permanently diverging from the at-rest result. Guard: every
+   commit writes ``batch_id`` into the
+   :class:`..sinks.table.VersionedTable` manifest meta and the step
+   SKIPS when the latest committed meta already carries it.
+   ``foreachBatch`` only ever replays the most recent batch, so
+   equality with the last applied id is a complete check.
 
 2. **Scores double-append.** A plain ``mode("append")`` parquet write
    re-appends the replayed batch's rows even where the store itself
@@ -21,9 +20,8 @@ the incremental stores (:mod:`.novelty`, :mod:`.cdc`, :mod:`.dsir`):
    output in place. Readers ``spark.read.parquet(scores_path)`` as
    before (partition discovery adds a ``batch`` bookkeeping column).
 
-Step ordering is scores-then-store: if the store says "applied", the
-scores for that batch were already written, so a fully-applied replay
-is a pure no-op.
+:func:`.store_base.store_step` is the one caller; it orders the steps
+scores-then-store, so a fully-applied replay is a pure no-op.
 """
 
 from __future__ import annotations
@@ -54,16 +52,15 @@ def write_batch_scores(
 def require_integer_cols(batch_df: DataFrame, cols: "list[str]", op: str) -> None:
     """Fail fast when a streamed value column is fractional-typed.
 
-    The incremental twins (moments/gini/rankcorr/ranktests/equidepth)
-    share the package fixed-point policy with their at-rest operators:
-    value columns must be integer-typed (snap monetary values to cents
-    upstream). The at-rest side raises ``ValueError`` on
+    The incremental twins share the package fixed-point policy with
+    their at-rest operators: value columns must be integer-typed (snap
+    monetary values to cents upstream). The at-rest side raises ``ValueError`` on
     ``FractionalType`` (``operators/profile.py::group_moments`` et
     al.); before this guard the streaming side silently did
     ``cast('long')`` — truncating a double-typed stream and quietly
     diverging from the documented bit-equal-twin contract. Mirror the
-    raise here, on the batch schema, inside every ``foreachBatch``
-    factory."""
+    raise here, on the batch schema, for every leg that declares
+    integer columns."""
     from pyspark.sql.types import FractionalType
 
     for c in cols:

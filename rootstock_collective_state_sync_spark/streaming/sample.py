@@ -1,16 +1,18 @@
 """Incremental deterministic bottom-k sampling: a uniform per-group
 sample of a stream, maintained exactly under any batch split, any
-batch order, AND replays — with no batch_id guard at all.
+batch order, AND replays.
 
 The sample is the group's ``k`` smallest ``md5(id)`` rows (the same
 salted-hash schedule as the KMV sketch and the deterministic centroid
 trainer): hash-order IS uniform-random order with a replayable RNG,
 and bottom-k is a MIN-MERGE structure — ``bottomk(A ∪ B) =
 bottomk(bottomk(A) ∪ B)`` — so the maintenance loop is idempotent
-and commutative by algebra, not by guard (the novelty/cdc min-merge
-family; contrast the sum-merge legs in :mod:`.cm`/:mod:`.twap`).
-``tests/test_streaming_sample.py`` pins stream==batch under shuffled
-arrival and double-applied batches.
+and commutative by algebra (the novelty/cdc min-merge family;
+contrast the sum-merge legs in :mod:`.cm`/:mod:`.twap`). The store
+runs the :mod:`.store_base` lifecycle, whose replay guard skips a
+same-id replay outright; ``tests/test_streaming_sample.py`` pins
+stream==batch under shuffled arrival and rows applied twice under
+fresh batch ids.
 
 Scale shape: state is k rows per group — control-plane; per batch
 one (group)-keyed window over (stored ∪ batch) rows, both k- and
@@ -22,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 
 def store_schema(group_col: str = "event_type") -> T.StructType:
@@ -35,6 +35,15 @@ def store_schema(group_col: str = "event_type") -> T.StructType:
             T.StructField("id_", T.LongType(), False),
             T.StructField("payload", T.StringType(), True),
         ]
+    )
+
+
+def _keep_bottom_k(df: DataFrame, group_col: str, k: int) -> DataFrame:
+    w = Window.partitionBy(group_col).orderBy("h", "id_")
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
     )
 
 
@@ -57,12 +66,7 @@ def bottom_k_sample(
             else F.lit(None).cast("string")
         ).alias("payload"),
     )
-    w = Window.partitionBy(group_col).orderBy("h", "id_")
-    return (
-        base.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _keep_bottom_k(base, group_col, k)
 
 
 def sample_foreach_batch(
@@ -74,30 +78,16 @@ def sample_foreach_batch(
     payload_col: "str | None" = None,
 ):
     """Return the ``foreachBatch`` function maintaining the bottom-k
-    sample store. No replay guard on purpose: min-merge + the
-    (group, h)-keyed dedup make a double-applied batch a provable
-    no-op, which the e2e test exercises directly."""
+    sample store; the post-merge sample is also the per-batch score
+    snapshot. The min-merge + the (group, h)-keyed dedup make rows
+    applied twice a semantic no-op."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        store.create_if_not_exists(
-            store_schema(group_col), merge_keys=[group_col, "h"], num_buckets=4
-        )
-        batch_rows = bottom_k_sample(
-            batch_df, group_col, id_col, k, payload_col
-        )
-        prev = store.read().select(*[f.name for f in store_schema(group_col)])
+    def advance(batch_df, prev, _meta):
+        batch_rows = bottom_k_sample(batch_df, group_col, id_col, k, payload_col)
         merged = prev.unionByName(batch_rows).dropDuplicates(
             [group_col, "h", "id_"]
         )
-        w = Window.partitionBy(group_col).orderBy("h", "id_")
-        new_state = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-        write_batch_scores(new_state, scores_path, batch_id)
-        store.overwrite(new_state, meta={"batch_id": int(batch_id)})
+        new_state = _keep_bottom_k(merged, group_col, k)
+        return new_state, [(new_state, scores_path)], {}
 
-    return step
+    return store_step(store, store_schema(group_col), [group_col, "h"], advance)

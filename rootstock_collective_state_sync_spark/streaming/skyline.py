@@ -1,7 +1,7 @@
 """Streaming 2-D skyline maintenance: the Pareto front of
 :mod:`..operators.skyline` kept current over a stream via
-``foreachBatch``, with the frontier itself as the store state
-(same store/commit/replay contract as :mod:`.kmv`).
+``foreachBatch``, with the frontier itself as the store state (the
+:mod:`.store_base` lifecycle).
 
 The skyline merge law makes this lossless AND idempotent:
 ``skyline(A ∪ B) == skyline(skyline(A) ∪ B)`` — dominated rows can
@@ -20,14 +20,11 @@ points, not the stream length.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from rootstock_collective_state_sync_spark.operators.skyline import skyline_2d
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 STORE_SCHEMA = T.StructType(
     [
@@ -48,23 +45,13 @@ def skyline_foreach_batch(
     so far. Batch rows: ``(id, x, y)``. The post-merge frontier is
     both the store state and the per-batch score snapshot."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            STORE_SCHEMA, merge_keys=["id"], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
+    def advance(batch_df, prev, _meta):
         merged = skyline_2d(
-            store.read()
-            .select("id", "x", "y")
-            .unionByName(batch_df.select("id", "x", "y")),
+            prev.unionByName(batch_df.select("id", "x", "y")),
             minimize="x",
             maximize="y",
             bucket=F.expr(f"CAST(x AS BIGINT) div {bucket_width}"),
         ).select("id", "x", "y")
-        write_batch_scores(merged, scores_path, batch_id)
-        store.overwrite(merged, meta={"batch_id": int(batch_id)})
+        return merged, [(merged, scores_path)], {}
 
-    return step
+    return store_step(store, STORE_SCHEMA, ["id"], advance)

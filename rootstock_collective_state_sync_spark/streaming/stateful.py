@@ -16,6 +16,7 @@ same way.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any, Iterator, Tuple
 
 import numpy as np
@@ -43,6 +44,25 @@ def _with_ts_ms(events: DataFrame) -> DataFrame:
     ``spark.sql.session.timeZone`` that shifted idle-state eviction
     by the tz offset."""
     return events.withColumn("ts_ms", F.expr("unix_millis(ts)"))
+
+
+def _per_user_state(
+    events: DataFrame, fn, output: str, state: str, mode: str, watermark: str
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` call site: per-user state on
+    ``ts_ms``-tagged events, evicted by event-time timeout."""
+    return (
+        _with_ts_ms(events).withWatermark("ts", watermark)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=output,
+            stateStructType=state,
+            outputMode=mode,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+
 
 OUTPUT_SCHEMA = (
     "user_id bigint, total_cents bigint, n_events bigint, finalized boolean"
@@ -99,21 +119,9 @@ def user_running_totals(
     user's last event + ``idle_minutes`` (state evicted). Requires an
     event-time column ``ts`` and a numeric ``value``.
     """
-    idle_ms = idle_minutes * 60_000
-
-    def fn(key, pdfs, state):
-        yield from _accumulate(key, pdfs, state, idle_ms)
-
-    return (
-        _with_ts_ms(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    fn = partial(_accumulate, idle_ms=idle_minutes * 60_000)
+    return _per_user_state(
+        events, fn, OUTPUT_SCHEMA, STATE_SCHEMA, "update", watermark
     )
 
 
@@ -194,23 +202,12 @@ def stream_decayed_scores(
     micro-batches (time-split triggers / sorted replay); within a
     batch rows are sorted here.
     """
-    idle_ms = idle_minutes * 60_000
-
-    def fn(key, pdfs, state):
-        yield from _decay_step(
-            key, pdfs, state, lookback, decay_num, decay_den, idle_ms
-        )
-
-    return (
-        _with_ts_ms(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=DECAY_OUTPUT_SCHEMA,
-            stateStructType=DECAY_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    fn = partial(
+        _decay_step, lookback=lookback, num=decay_num, den=decay_den,
+        idle_ms=idle_minutes * 60_000,
+    )
+    return _per_user_state(
+        events, fn, DECAY_OUTPUT_SCHEMA, DECAY_STATE_SCHEMA, "append", watermark
     )
 
 
@@ -266,21 +263,10 @@ def stream_event_transitions(
     `q_event_transitions` when batches respect per-key time order
     (asserted by the batch==stream e2e test); aggregate downstream
     for the transition matrix."""
-    idle_ms = idle_minutes * 60_000
-
-    def fn(key, pdfs, state):
-        yield from _transition_step(key, pdfs, state, idle_ms)
-
-    return (
-        _with_ts_ms(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TRANSITION_OUTPUT_SCHEMA,
-            stateStructType=TRANSITION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    fn = partial(_transition_step, idle_ms=idle_minutes * 60_000)
+    return _per_user_state(
+        events, fn, TRANSITION_OUTPUT_SCHEMA, TRANSITION_STATE_SCHEMA,
+        "append", watermark,
     )
 
 
@@ -340,20 +326,9 @@ def stream_session_paths(
     Ordering contract: same as :func:`stream_decayed_scores` — per-key
     event-time order across micro-batches; in-batch rows sorted here.
     """
-    idle_ms = idle_minutes * 60_000
-    gap_s = gap_minutes * 60
-
-    def fn(key, pdfs, state):
-        yield from _paths_step(key, pdfs, state, gap_s, idle_ms)
-
-    return (
-        _with_ts_ms(events).withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=PATHS_OUTPUT_SCHEMA,
-            stateStructType=PATHS_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    fn = partial(
+        _paths_step, gap_s=gap_minutes * 60, idle_ms=idle_minutes * 60_000
+    )
+    return _per_user_state(
+        events, fn, PATHS_OUTPUT_SCHEMA, PATHS_STATE_SCHEMA, "append", watermark
     )

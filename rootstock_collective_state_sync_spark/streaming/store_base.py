@@ -1,35 +1,53 @@
-"""Shared lifecycle for the "one store, N reports" streaming family
-(r15 verdict item 5).
+"""The one store lifecycle of every incremental ``foreachBatch`` leg.
 
-Seven legs (equidepth, rank tests, vocabulary, Gini/Lorenz, rank
-correlation, moments, daily volume) follow the same design: the
-report is NOT mergeable, but a keyed SUFFICIENT-STATISTIC table adds
-exactly over disjoint row sets, so each micro-batch (a) reduces the
-batch to that table, (b) keyed-sums it into a
-:class:`..sinks.table.VersionedTable`, and (c) re-renders every
-report from the merged store — bit-equal to the at-rest operator over
-the same rows. The r15 integer-guard fix had to be applied to five
-modules separately, which is the tell that the lifecycle (schema,
-input guard, replay guard, merge law, checkpoint-before-fan-out,
-scores-then-store ordering) belonged in ONE place; each leg is now a
-declaration of (schema, merge keys, batch extractor, renderers).
+Each incremental leg keeps its state in ONE
+:class:`..sinks.table.VersionedTable` and is a declaration of four
+things: the store schema, its merge keys, its bucket count, and one
+``advance`` function holding the leg's merge law::
 
-Invariants enforced here, once:
+    advance(batch_df, prev_state, prev_meta)
+        -> (new_state, [(df, path), ...], leg_meta)
 
-- ``require_integer_cols`` on declared value columns (fixed-point
-  policy — a silently fractional stream column truncates on the
-  ``cast('long')`` and corrupts the store forever);
-- empty batches are no-ops;
-- the :mod:`.replay` ``batch_id`` guard (merges are not idempotent;
-  a replayed batch must be a no-op);
-- the merge law is a keyed sum of every non-key column, each sum
-  cast back to the column's DECLARED store type (longs stay longs,
-  Decimal(38,0) moments stay exact);
-- with more than one renderer the merged table is locally
-  checkpointed so N renders cost one scan;
-- scores are written BEFORE the store version commits (a crash
-  between the two re-runs the batch; the replay guard then skips the
-  double-merge while the score write is idempotent per batch key).
+``prev_state`` is the last committed store version (projected to the
+declared schema; empty on the first batch), ``prev_meta`` its manifest
+meta. ``new_state`` replaces the store; every ``(df, path)`` output
+(rendered scores, dropped late rows) is written batch-keyed under
+``path``; ``leg_meta`` rides in the new manifest next to ``batch_id``
+(MG's compaction ``delta``, a watermark's ``max_t_us``, ...).
+
+:func:`store_step` is the only code that runs the lifecycle, in this
+order:
+
+1. ``require_integer_cols`` on declared integer columns (fixed-point
+   policy — a silently fractional column truncates on the
+   ``cast('long')`` and corrupts the store forever);
+2. an empty batch is a no-op;
+3. ``create_if_not_exists``;
+4. the :mod:`.replay` ``batch_id`` guard. ``foreachBatch`` is
+   at-least-once: a crash before the offset commit replays the SAME
+   batch. Sum merges would double-count, and even the idempotent
+   min-merges (novelty, CDC, sample) would re-score a replayed batch
+   against the post-merge store, so a fully-applied replay is skipped;
+5. read the previous state and its meta;
+6. write every batch-keyed output (``path/batch=<id>/``, overwrite in
+   place) BEFORE the store commits;
+7. ``store.overwrite(new_state, meta={"batch_id": ..., **leg_meta})``.
+
+The order makes every crash recoverable: a crash between 6 and 7
+re-runs the batch from the last committed store and its outputs
+overwrite their own partial directories; once 7 commits, the guard
+turns the replay into a pure no-op.
+
+:func:`sufficient_stat_step` is the keyed-sum ``advance`` for the
+"one store, N reports" family (equidepth, rank tests, vocabulary,
+Gini/Lorenz, rank correlation, moments, daily volume, Benford): the
+report is not mergeable, but a keyed sufficient-statistic table adds
+exactly over disjoint row sets, so each batch reduces to that table,
+keyed-sums into the store (every sum cast back to the column's
+declared type — longs stay longs, Decimal(38,0) moments stay exact),
+and re-renders every report from the merged table — bit-equal to the
+at-rest operator over the same rows. With more than one renderer the
+merged table is locally checkpointed so N renders cost one scan.
 """
 
 from __future__ import annotations
@@ -45,27 +63,23 @@ from rootstock_collective_state_sync_spark.streaming.replay import (
     write_batch_scores,
 )
 
+Outputs = list[tuple[DataFrame, str]]
+Advance = Callable[[DataFrame, DataFrame, dict], tuple[DataFrame, Outputs, dict]]
 Renderer = tuple[Callable[[DataFrame], DataFrame], str]
 
 
-def sufficient_stat_step(
+def store_step(
     store: VersionedTable,
     schema: T.StructType,
     merge_keys: Sequence[str],
-    extract: Callable[[DataFrame], DataFrame],
-    renderers: Sequence[Renderer],
+    advance: Advance,
     *,
-    op_name: str,
+    num_buckets: int = 4,
     integer_cols: Sequence[str] = (),
-    num_buckets: int = 8,
+    op_name: str = "",
 ):
-    """Build the ``foreachBatch`` step for one sufficient-statistic
-    store. ``extract`` reduces a batch to the store's schema;
-    ``renderers`` is a list of ``(render_fn, score_path)`` pairs, each
-    rendered from the merged store per batch."""
-    all_cols = [f.name for f in schema.fields]
-    sum_cols = [c for c in all_cols if c not in merge_keys]
-    col_type = {f.name: f.dataType.simpleString() for f in schema.fields}
+    """Build the ``foreachBatch`` step running the store lifecycle
+    (module docstring) around ``advance``."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         if integer_cols:
@@ -77,17 +91,45 @@ def sufficient_stat_step(
         )
         if not created and batch_already_applied(store, batch_id):
             return
+        prev = store.read().select(*schema.names)
+        new_state, outputs, leg_meta = advance(
+            batch_df, prev, store.manifest().meta
+        )
+        for df, path in outputs:
+            write_batch_scores(df, path, batch_id)
+        store.overwrite(new_state, meta={"batch_id": int(batch_id), **leg_meta})
+
+    return step
+
+
+def sufficient_stat_step(
+    store: VersionedTable,
+    schema: T.StructType,
+    merge_keys: Sequence[str],
+    extract: Callable[[DataFrame], DataFrame],
+    renderers: Sequence[Renderer],
+    *,
+    op_name: str = "",
+    integer_cols: Sequence[str] = (),
+    num_buckets: int = 8,
+):
+    """Build the ``foreachBatch`` step for one sufficient-statistic
+    store. ``extract`` reduces a batch to the store's schema;
+    ``renderers`` is a list of ``(render_fn, score_path)`` pairs, each
+    rendered from the merged store per batch."""
+    sum_fields = [f for f in schema.fields if f.name not in merge_keys]
+
+    def advance(batch_df, prev, _meta):
         merged = (
-            store.read()
-            .select(*all_cols)
-            .unionByName(extract(batch_df))
+            prev.unionByName(extract(batch_df))
             .groupBy(*merge_keys)
-            .agg(*[F.sum(c).cast(col_type[c]).alias(c) for c in sum_cols])
+            .agg(*[F.sum(f.name).cast(f.dataType).alias(f.name) for f in sum_fields])
         )
         if len(renderers) > 1:
             merged = merged.localCheckpoint(eager=True)  # N renders, 1 scan
-        for render, path in renderers:
-            write_batch_scores(render(merged), path, batch_id)
-        store.overwrite(merged, meta={"batch_id": int(batch_id)})
+        return merged, [(render(merged), path) for render, path in renderers], {}
 
-    return step
+    return store_step(
+        store, schema, merge_keys, advance, num_buckets=num_buckets,
+        integer_cols=integer_cols, op_name=op_name,
+    )

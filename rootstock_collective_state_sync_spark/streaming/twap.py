@@ -1,7 +1,7 @@
 """Streaming TWAP maintenance: the mergeable
 :func:`..operators.temporal.twap_partial` aggregate driven by
 Structured Streaming ``foreachBatch``, with one partial row per group
-kept in the engine's own :class:`..sinks.table.VersionedTable`.
+in a store that runs the :mod:`.store_base` lifecycle.
 
 Contract: MONOTONE ARRIVAL — every event in batch N+1 follows every
 batch-N event of the same group in the (ts, id) total order (the
@@ -18,10 +18,6 @@ the step ENFORCES it: a violating batch raises
 corrections, or the watermark-bounded :mod:`.latebars` twin when
 the source genuinely delivers out of order).
 
-The merge's sums are NOT idempotent, so fully-applied replays are
-skipped via the :mod:`.replay` batch_id guard; per-batch rendered
-TWAPs land under batch-keyed score paths.
-
 Scale shape: per micro-batch cost is one batch-sized window pass +
 a groups-bounded full-outer merge; store state is ONE row per group
 — control-plane, independent of stream length.
@@ -29,7 +25,7 @@ a groups-bounded full-outer merge; store state is ONE row per group
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import types as T
 
 from rootstock_collective_state_sync_spark.operators.temporal import (
     twap_merge2,
@@ -40,10 +36,7 @@ from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
 from rootstock_collective_state_sync_spark.streaming.contracts import (
     check_monotone_groups,
 )
-from rootstock_collective_state_sync_spark.streaming.replay import (
-    batch_already_applied,
-    write_batch_scores,
-)
+from rootstock_collective_state_sync_spark.streaming.store_base import store_step
 
 
 def store_schema(group_col: str = "user_id") -> T.StructType:
@@ -75,23 +68,13 @@ def twap_foreach_batch(
     TWAP partial ``store`` and writing each batch's post-merge
     rendered TWAPs under ``scores_path``."""
 
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        created = store.create_if_not_exists(
-            store_schema(group_col), merge_keys=[group_col], num_buckets=4
-        )
-        if not created and batch_already_applied(store, batch_id):
-            return
+    def advance(batch_df, prev, _meta):
         new_p = twap_partial(batch_df, group_col, ts_col, value_col, id_col)
-        prev = store.read().select(*[f.name for f in store_schema(group_col)])
-        if not created:
-            # loud-fail BEFORE mutating: an out-of-order batch would
-            # mis-weight the bridge segment (contract enforcement,
-            # groups-bounded join — control-plane)
-            check_monotone_groups(prev, new_p, group_col, "twap")
+        # loud-fail BEFORE mutating: an out-of-order batch would
+        # mis-weight the bridge segment (contract enforcement,
+        # groups-bounded join — control-plane)
+        check_monotone_groups(prev, new_p, group_col, "twap")
         merged = twap_merge2(prev, new_p, group_col)
-        write_batch_scores(twap_render(merged, group_col), scores_path, batch_id)
-        store.overwrite(merged, meta={"batch_id": int(batch_id)})
+        return merged, [(twap_render(merged, group_col), scores_path)], {}
 
-    return step
+    return store_step(store, store_schema(group_col), [group_col], advance)

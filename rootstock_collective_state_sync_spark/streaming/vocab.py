@@ -11,9 +11,8 @@ terms hash into) and the census after any stream prefix renders via
 ``vocab_census_from_tf``, bit-for-bit equal to the at-rest census
 over the same documents (``tests/test_streaming_vocab.py``).
 
-Lifecycle (replay guard, merge law, checkpoint before a multi-render
-fan-out, scores-then-store ordering) lives in :mod:`.store_base` —
-this module only declares the statistic and the renderer(s).
+A :func:`.store_base.sufficient_stat_step` declaration: the statistic
+and its renderers.
 
 Scale shape: per micro-batch one token explode reduced to the batch's
 own (source, term) counts, then a keyed merge proportional to the

@@ -43,8 +43,9 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(full)
             continue
         if window is not None and "test_conformance.py" in item.nodeid:
-            name = item.nodeid.rsplit("[", 1)[-1].rstrip("]")
-            if "[" in item.nodeid and name not in window:
+            callspec = getattr(item, "callspec", None)
+            name = callspec.params.get("name") if callspec else None
+            if name is not None and name not in window:
                 item.add_marker(full)
 
 

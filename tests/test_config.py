@@ -12,9 +12,11 @@ import yaml
 
 from rootstock_collective_state_sync_spark.config import load_config
 
-FIXTURE = str(Path(__file__).parent / "fixtures" / "entities.yml")
-REF_DEFAULT = "/root/reference/config/default.yml"
-REF_ENV_MAP = "/root/reference/config/custom-environment-variables.yml"
+FIXTURES = Path(__file__).parent / "fixtures"
+FIXTURE = str(FIXTURES / "entities.yml")
+# reference-format config pair, vendored so the test runs on any host
+REF_DEFAULT = str(FIXTURES / "default.yml")
+REF_ENV_MAP = str(FIXTURES / "custom-environment-variables.yml")
 
 
 def test_mapping_file_env_wins_over_yaml(tmp_path):
@@ -71,8 +73,8 @@ def test_builtin_db_and_provider_conventions():
 
 
 def test_reference_env_map_applies_to_reference_config():
-    """The reference's own mapping file works verbatim against the
-    reference's own default config (parity with
+    """A reference-format mapping file works verbatim against a
+    reference-format default config (parity with
     config/custom-environment-variables.yml:1-9)."""
     doc = load_config(
         REF_DEFAULT,

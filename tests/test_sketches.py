@@ -229,3 +229,36 @@ def test_kmv_overlap_sketch_only_matches_audited(spark):
         for c in ("n_x", "kmv_matches", "kmv_union_est",
                   "kmv_inter_est", "kmv_jaccard_e6"):
             assert r[c] == f[c], (r["grp_a"], r["grp_b"], c)
+
+
+def test_kmv_bottom_k_dedup_plan_uses_window_group_limit(spark):
+    """The kmv streaming leg and the ``kmv_overlap`` seat rely on
+    Spark's rank-limit pushdown: ``kmv_bottom_k(dedup=True)`` must plan
+    a partial ``WindowGroupLimit`` below the exchange, and the operator
+    must vanish when the optimizer threshold disables the pushdown — so
+    a conf or Spark-version change fails here, not silently in the
+    shuffle bytes."""
+    from rootstock_collective_state_sync_spark.operators.sketches import (
+        kmv_bottom_k,
+    )
+
+    h = spark.range(2000).select(
+        (F.col("id") % 3).cast("string").alias("grp"),
+        F.xxhash64("id").alias("h"),
+    )
+
+    def executed_plan():
+        qe = kmv_bottom_k(h, 16, dedup=True)._jdf.queryExecution()
+        return qe.executedPlan().toString()
+
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    assert "WindowGroupLimit" in executed_plan()
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        assert "WindowGroupLimit" not in executed_plan()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)

@@ -1,6 +1,7 @@
 """Incremental bottom-k sample e2e: the min-merge algebra makes the
-maintenance loop correct under shuffled arrival AND double-applied
-batches with NO replay guard — stream == at-rest bit-for-bit."""
+maintenance loop correct under shuffled arrival AND rows applied twice
+(under a fresh batch id, past the replay guard) — stream == at-rest
+bit-for-bit."""
 
 from __future__ import annotations
 
@@ -24,18 +25,19 @@ def _snap(df):
         "event_type", "h", "id_", "payload").collect()))
 
 
-def test_streaming_sample_matches_at_rest_without_guard(spark, tmp_path):
+def test_streaming_sample_matches_at_rest_under_double_apply(spark, tmp_path):
     store = VersionedTable(spark, tmp_path / "s_store")
     step = sample_foreach_batch(
         store, str(tmp_path / "s_scores"), k=5,
         group_col="event_type", id_col="event_id", payload_col="payload",
     )
-    # shuffled arrival + a DOUBLE-APPLIED middle batch (no guard: the
-    # min-merge makes the replay a semantic no-op, not a skipped one)
+    # shuffled arrival + a DOUBLE-APPLIED middle batch under a fresh
+    # batch id (the replay guard would skip a same-id replay): the
+    # min-merge makes the second apply a semantic no-op
     step(_df(spark, ROWS[60:]), 0)
     step(_df(spark, ROWS[:30]), 1)
-    step(_df(spark, ROWS[:30]), 1)
-    step(_df(spark, ROWS[30:60]), 2)
+    step(_df(spark, ROWS[:30]), 2)
+    step(_df(spark, ROWS[30:60]), 3)
 
     want = _snap(
         bottom_k_sample(
