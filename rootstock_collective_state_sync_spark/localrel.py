@@ -13,11 +13,17 @@ batches instead: no Python runner exists at execution time and the
 slice count follows the row count, not the core count. Measured 0.97 s
 -> 0.12 s per materialization for a 5-row LUT frame (guide §4.1: keep
 the JVM<->Python boundary out of the per-task path).
+
+Callers: control-plane frames of the operators and plans (query
+tables, probe lists, sketch renders, spines) and the sync loop's
+driver batches (``streaming.sync``: each entity flush of at most
+``merge_chunk_rows`` rows, the changelog ingest and the watermark
+row), which ``merge_upsert`` then reads as ``LocalTableScan``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 
 def _has_nan(cell) -> bool:
@@ -30,16 +36,19 @@ def _has_nan(cell) -> bool:
     return False
 
 
-def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """``createDataFrame`` for SMALL driver-side row lists (control
-    plane: query tables, probe lists, sketch renders, spines).
-    Identical values and schema to ``spark.createDataFrame(rows,
-    schema)`` — pandas is a transport here, never arithmetic: every
-    cell rides as a Python object (``dtype=object``) straight into
-    Arrow, so ints stay exact and floats keep their bits. Falls back
+def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """``createDataFrame`` for driver-side row lists (see the module
+    docstring for the callers); ``schema`` is a DDL string or a
+    ``StructType``. Identical values and schema to
+    ``spark.createDataFrame(rows, schema)`` — pandas is a transport
+    here, never arithmetic: every cell rides as a Python object
+    (``dtype=object``) straight into Arrow, so ints stay exact and
+    floats keep their bits. Falls back
     to the plain path when rows are empty (no column count to build a
-    pandas frame from) or Arrow cannot represent a cell type (the
-    session enables Arrow fallback anyway)."""
+    pandas frame from) or Arrow cannot represent a cell (the session
+    enables Arrow fallback anyway): a Decimal beyond the column's
+    precision takes that path too and still raises, when the frame
+    is first read."""
     rows = list(rows)
     if not rows:
         return spark.createDataFrame([], schema)

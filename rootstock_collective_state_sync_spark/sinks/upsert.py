@@ -18,6 +18,12 @@ Spark-first physical plan: the batch is hashed into the table's fixed
 buckets; ONLY the affected buckets are read back, anti-joined-by-merge
 (window latest-wins), and rewritten. No full-table rewrite, no
 driver-side loops — merge cost scales with batch size, not table size.
+Action budget per merge: one control aggregate, grouped by bucket
+over the cached, arrival-tagged batch, whose collect fills the cache
+and returns the affected buckets, the empty-batch verdict and the
+NOT NULL check at once; then one write. Every other pass reads the
+cache, so a batch that is costly to produce (an RPC frame, a Python
+scan) is produced once.
 The reference's ``batchSize`` chunking (10 000 rows/statement) has no
 analog: Spark writes all buckets in parallel in one job.
 """
@@ -26,7 +32,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from rootstock_collective_state_sync_spark.sinks.table import (
     BUCKET_COL,
@@ -40,17 +46,10 @@ _SEQ = "__seq"
 _SRC = "__is_batch"
 
 
-def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project an incoming batch onto the declared schema.
-
-    - drops undeclared columns (``dbUpsert.ts:7-11``);
-    - flattens nested FK structs ``{id: …}`` to the id value
-      (``dbUpsert.ts:13-21``);
-    - casts to declared types (overflow raises — uint256 policy);
-    - raises when a declared NOT NULL column is missing or null
-      (Spark does not enforce nullability on write; the reference
-      delegated this to Postgres constraints).
-    """
+def _project(df: DataFrame, schema: T.StructType) -> tuple[DataFrame, list[str]]:
+    """``df`` projected onto ``schema`` (see :func:`prepare_batch`) and
+    the names of its NOT NULL columns; raises when one of those is
+    missing from ``df`` altogether."""
     in_fields = {f.name: f for f in df.schema.fields}
     cols = []
     for f in schema.fields:
@@ -64,15 +63,33 @@ def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
         if isinstance(src.dataType, T.StructType) and "id" in src.dataType.names:
             c = c.getField("id")  # FK object -> scalar id
         cols.append(c.cast(f.dataType).alias(f.name))
-    out = df.select(*cols)
-    required = [f.name for f in schema.fields if not f.nullable]
-    if required:
-        # engine-side NOT NULL enforcement, one distributed pass
-        bad = out.filter(
-            " OR ".join(f"`{c}` IS NULL" for c in required)
-        ).limit(1).count()
-        if bad:
-            raise ValueError(f"NOT NULL violation in batch for one of {required}")
+    return df.select(*cols), [f.name for f in schema.fields if not f.nullable]
+
+
+def _violation(required: list[str]) -> Column:
+    """True on a row that is null in any ``required`` column."""
+    return F.expr(" OR ".join(f"`{c}` IS NULL" for c in required) or "false")
+
+
+def _not_null_error(required: list[str]) -> ValueError:
+    return ValueError(f"NOT NULL violation in batch for one of {required}")
+
+
+def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project an incoming batch onto the declared schema.
+
+    - drops undeclared columns (``dbUpsert.ts:7-11``);
+    - flattens nested FK structs ``{id: …}`` to the id value
+      (``dbUpsert.ts:13-21``);
+    - casts to declared types (overflow raises — uint256 policy);
+    - raises when a declared NOT NULL column is missing or null
+      (Spark does not enforce nullability on write; the reference
+      delegated this to Postgres constraints).
+    """
+    out, required = _project(df, schema)
+    # engine-side NOT NULL enforcement, one distributed pass
+    if required and out.filter(_violation(required)).limit(1).count():
+        raise _not_null_error(required)
     return out
 
 
@@ -94,16 +111,28 @@ def merge_upsert(
     """
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
-    src = prepare_batch(batch, schema)
-    if not src.take(1):
-        return m0.version
-
+    src, required = _project(batch, schema)
     # last occurrence of a key in the batch wins: tag arrival order
     # BEFORE any shuffle moves rows around.
-    src = src.withColumn(_SEQ, F.monotonically_increasing_id())
-    src = src.withColumn(BUCKET_COL, bucket_expr(keys, nb)).cache()
+    src = (
+        src.withColumn(_SEQ, F.monotonically_increasing_id())
+        .withColumn(BUCKET_COL, bucket_expr(keys, nb))
+        .cache()
+    )
     try:
-        affected = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
+        # the merge's one control-plane action: fills the cache, and its
+        # groups are the affected buckets (none: an empty batch), each
+        # flagged when one of its rows breaks a NOT NULL column
+        control = (
+            src.groupBy(BUCKET_COL)
+            .agg(F.max(_violation(required)).alias("bad"))
+            .collect()
+        )
+        if not control:
+            return m0.version
+        if any(r["bad"] for r in control):
+            raise _not_null_error(required)
+        affected = [r[BUCKET_COL] for r in control]
 
         def attempt() -> int:
             prev = table.manifest()

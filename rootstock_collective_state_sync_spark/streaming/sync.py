@@ -22,6 +22,11 @@ pages are flushed to the merge sink every ``merge_chunk_rows`` rows,
 bounding driver memory; bulk hydration of very large entities should
 use the partition-parallel DataSource path instead
 (``spark.read.format("subgraph")`` -> ``merge_upsert``).
+
+Every batch the loop builds on the driver (an entity flush, the
+changelog ingest, the watermark row) is a JVM local relation
+(:func:`..localrel.local_df`): it plans as ``LocalTableScan``, so the
+merge's passes over it run no Python worker.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ from rootstock_collective_state_sync_spark.config import (
     compile_entity,
     merge_key_columns,
 )
+from rootstock_collective_state_sync_spark.localrel import local_df
 from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upsert
 from rootstock_collective_state_sync_spark.sources.graphql import SubgraphClient
 from rootstock_collective_state_sync_spark.sources.subgraph_source import (
@@ -192,8 +198,7 @@ class SyncEngine:
         def flush():
             nonlocal buffer
             if buffer:
-                df = self.spark.createDataFrame(buffer, struct)
-                merge_upsert(table, df, meta=meta)
+                merge_upsert(table, local_df(self.spark, buffer, struct), meta=meta)
                 buffer = []
 
         for page in self._pages(name, where, first_page):
@@ -233,17 +238,13 @@ class SyncEngine:
 
     def set_watermark(self, block: Block) -> None:
         struct = compile_entity(self.schema, self.schema[WATERMARK_ENTITY])
-        df = self.spark.createDataFrame(
-            [
-                (
-                    True,
-                    Decimal(block.number),
-                    Decimal(block.timestamp),
-                    _hex_to_bytes(block.hash),
-                )
-            ],
-            struct,
+        row = (
+            True,
+            Decimal(block.number),
+            Decimal(block.timestamp),
+            _hex_to_bytes(block.hash),
         )
+        df = local_df(self.spark, [row], struct)
         merge_upsert(
             self.catalog.table(WATERMARK_ENTITY),
             df,
@@ -307,9 +308,7 @@ class SyncEngine:
         # ingest the changelog feed itself + advance the watermark
         entity = self.schema[CHANGELOG_ENTITY]
         struct = compile_entity(self.schema, entity)
-        df = self.spark.createDataFrame(
-            records_to_rows(self.schema, entity, entries), struct
-        )
+        df = local_df(self.spark, records_to_rows(self.schema, entity, entries), struct)
         merge_upsert(
             self.catalog.table(CHANGELOG_ENTITY),
             df,

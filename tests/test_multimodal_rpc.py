@@ -286,3 +286,37 @@ def test_image_near_dup_pairs_finds_planted_pair(spark):
              for r in M.image_near_dup_pairs(media).collect()}
     assert pairs.get((1, 41)) == 0
     assert (1, 121) not in pairs and (41, 121) not in pairs
+
+
+def test_refresh_proposal_states_calls_each_live_id_once(spark, tmp_table_dir, tmp_path):
+    """Each live proposal id reaches the RPC exactly once per refresh:
+    the merge reads its ``mapInPandas`` batch from the cache after one
+    pass, instead of re-running the calls on every pass. The calls are
+    counted through a file, since the function runs in Python workers."""
+    table = TableCatalog(spark, tmp_table_dir).table("Proposal").create(
+        PROPOSAL_SCHEMA, ["id"], num_buckets=4
+    )
+    from rootstock_collective_state_sync_spark.sinks import merge_upsert
+
+    live = {1: 0, 2: 1, 4: 4}  # id byte -> rawState, all live
+    merge_upsert(
+        table,
+        spark.createDataFrame(
+            [(pid(i), f"p{i}", s, "x") for i, s in live.items()]
+            + [(pid(3), "p3", 7, "Executed")],
+            PROPOSAL_SCHEMA,
+        ),
+    )
+    log = tmp_path / "multicall.log"
+
+    def counting_multicall(ids: list[str]) -> dict[str, int]:
+        with open(log, "a") as fh:
+            fh.write("".join(f"{h}\n" for h in ids))
+        return {h: 5 for h in ids}
+
+    rpc.refresh_proposal_states(table, counting_multicall)
+    calls = sorted(log.read_text().split())
+    assert calls == sorted("0x" + pid(i).hex() for i in live)
+    assert {bytes(r.id)[0]: r.rawState for r in table.read().collect()} == {
+        1: 5, 2: 5, 3: 7, 4: 5,
+    }

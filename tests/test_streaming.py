@@ -694,3 +694,48 @@ def test_streaming_shell_end_to_end(spark, tmp_path, world):
     ]
     assert len(coalesced) == 4
     assert len(new_calls) == 6
+
+
+# ---------------------------------------------------------------------------
+# driver batches on the sync path are JVM local relations
+# ---------------------------------------------------------------------------
+
+
+def test_sync_batches_plan_as_local_relations(spark, tmp_path, world, monkeypatch):
+    """The entity flush, the changelog ingest and the watermark row reach
+    ``merge_upsert`` as ``LocalTableScan``: a ``Scan ExistingRDD`` batch
+    would run a Python worker per slice on every pass of the merge."""
+    from rootstock_collective_state_sync_spark.streaming import sync as sync_mod
+
+    plans: dict[str, str] = {}
+
+    def record(table, df, **_):
+        plans[table.path.name] = df._jdf.queryExecution().executedPlan().toString()
+        return table.current_version()
+
+    eng = make_engine(spark, tmp_path, world)
+    eng.create_tables()
+    monkeypatch.setattr(sync_mod, "merge_upsert", record)
+    eng.sync_from_changelog(world.chain().head_block())
+    assert set(plans) == {"Account", "VoteCast", "BlockChangeLog", "LastProcessedBlock"}
+    for name, plan in plans.items():
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
+
+
+def test_sync_entity_overflow_raises_and_commits_nothing(spark, tmp_path, world):
+    """Without hex shadow columns a BigInt past Decimal(38,0) is loud on
+    the local-relation path too, and the merge leaves no new version."""
+    world.extend(
+        synthetic_blocks(6, 1, fork_tag="a"),
+        {6: {"VoteCast": [{**vote(9), "weight": str(2**200)}]}},
+    )
+    eng = make_engine(spark, tmp_path, world)
+    eng.create_tables()
+    table = eng.catalog.table("VoteCast")
+    v0 = table.current_version()
+    from pyspark.errors import ArithmeticException
+
+    with pytest.raises(ArithmeticException, match="Decimal\\(38, 0\\)"):
+        eng.sync_entity("VoteCast")
+    assert table.current_version() == v0

@@ -8,11 +8,13 @@ changed-rows-only merge (FIXTURES.md F8).
 
 from __future__ import annotations
 
+import uuid
 from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
+from rootstock_collective_state_sync_spark.localrel import local_df
 from rootstock_collective_state_sync_spark.sinks import (
     TableCatalog,
     merge_upsert,
@@ -216,3 +218,55 @@ def test_version_diff_change_feed(spark, table):
     got3 = {(r["op"], r["id"]) for r in table.diff(v2, v3).collect()}
     assert got3 == {("update", "a")}
     assert table.diff(v3, v3).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# merge over a JVM local relation (the sync loop's batches)
+# ---------------------------------------------------------------------------
+
+#: Jobs of one merge of a 16-row local relation into a 4-bucket table:
+#: three for the control aggregate (cache fill, shuffle map, result) and
+#: three for the write. A probe, a ``take`` or a ``distinct`` pass added
+#: beside the control aggregate lifts it above this.
+MERGE_JOB_BUDGET = 6
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs launched by ``fn``, read through a job group."""
+    sc = spark.sparkContext
+    group = f"merge-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_of_local_batch_stays_in_job_budget(spark, table):
+    merge_upsert(table, local_df(spark, [(f"k{i}", Decimal(i), None) for i in range(40)], SCHEMA))
+    batch = local_df(spark, [(f"k{i}", Decimal(10 * i), "n") for i in range(16)], SCHEMA)
+    jobs = _jobs_of(spark, lambda: merge_upsert(table, batch))
+    assert jobs <= MERGE_JOB_BUDGET
+    got = rows(table)
+    assert len(got) == 40
+    assert got["k3"] == (Decimal(30), "n") and got["k20"] == (Decimal(20), None)
+
+
+def test_local_batch_duplicate_first_and_last_row_last_wins(spark, table):
+    """Arrival order survives a local relation of several slices: the
+    duplicate key's last row wins even though its first row sits in
+    another slice."""
+    n = 1200
+    data = [("dup", Decimal(-1), "first")]
+    data += [(f"k{i}", Decimal(i), None) for i in range(1, n - 1)]
+    data += [("dup", Decimal(n), "last")]
+    batch = local_df(spark, data, SCHEMA)
+    # one slice per core, up to the row count: several on any multi-core host
+    assert batch.rdd.getNumPartitions() == min(n, spark.sparkContext.defaultParallelism)
+    merge_upsert(table, batch)
+    got = rows(table)
+    assert len(got) == n - 1
+    assert got["dup"] == (Decimal(n), "last")
