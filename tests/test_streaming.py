@@ -726,6 +726,8 @@ def test_sync_batches_plan_as_local_relations(spark, tmp_path, world, monkeypatc
 def test_sync_entity_overflow_raises_and_commits_nothing(spark, tmp_path, world):
     """Without hex shadow columns a BigInt past Decimal(38,0) is loud on
     the local-relation path too, and the merge leaves no new version."""
+    from pyspark.errors import ArithmeticException
+
     world.extend(
         synthetic_blocks(6, 1, fork_tag="a"),
         {6: {"VoteCast": [{**vote(9), "weight": str(2**200)}]}},
@@ -734,8 +736,6 @@ def test_sync_entity_overflow_raises_and_commits_nothing(spark, tmp_path, world)
     eng.create_tables()
     table = eng.catalog.table("VoteCast")
     v0 = table.current_version()
-    from pyspark.errors import ArithmeticException
-
     with pytest.raises(ArithmeticException, match="Decimal\\(38, 0\\)"):
         eng.sync_entity("VoteCast")
     assert table.current_version() == v0
