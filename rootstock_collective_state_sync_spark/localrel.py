@@ -39,7 +39,7 @@ def _has_nan(cell) -> bool:
 def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
     """``createDataFrame`` for driver-side row lists (see the module
     docstring for the callers); ``schema`` is a DDL string or a
-    ``StructType``. Identical values and schema to
+    ``StructType``. Identical values to
     ``spark.createDataFrame(rows, schema)`` — pandas is a transport
     here, never arithmetic: every cell rides as a Python object
     (``dtype=object``) straight into Arrow, so ints stay exact and
@@ -48,7 +48,18 @@ def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame
     pandas frame from) or Arrow cannot represent a cell (the session
     enables Arrow fallback anyway): a Decimal beyond the column's
     precision takes that path too and still raises, when the frame
-    is first read."""
+    is first read.
+
+    Every top-level column of the frame is nullable, whatever
+    ``schema`` declares: the Arrow path does not check nullability, and
+    a null under a column declared NOT NULL would let the optimizer
+    fold ``IS NULL`` on it to false. A caller that needs NOT NULL checks
+    it on the frame (``merge_upsert`` does)."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
+    )
     rows = list(rows)
     if not rows:
         return spark.createDataFrame([], schema)

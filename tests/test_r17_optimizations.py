@@ -72,6 +72,24 @@ def test_local_df_empty_rows(spark):
     )
 
 
+def test_local_df_declares_every_column_nullable(spark):
+    """The Arrow path does not check nullability, so the frame must not
+    claim NOT NULL: a null there would make ``IS NULL`` fold to false."""
+    from rootstock_collective_state_sync_spark.localrel import local_df
+
+    sch = T.StructType(
+        [
+            T.StructField("a", T.LongType(), False),
+            T.StructField("b", T.StringType(), False),
+        ]
+    )
+    df = local_df(spark, [(1, None), (2, "x")], sch)
+    assert all(f.nullable for f in df.schema.fields)
+    assert df.filter(F.col("b").isNull()).count() == 1
+    ddl = local_df(spark, [(1,)], "a bigint NOT NULL")
+    assert ddl.schema == T.StructType([T.StructField("a", T.LongType())])
+
+
 # ---------------------------------------------------------------------------
 # VersionedTable.read — size-adaptive coalesce
 # ---------------------------------------------------------------------------

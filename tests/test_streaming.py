@@ -739,3 +739,22 @@ def test_sync_entity_overflow_raises_and_commits_nothing(spark, tmp_path, world)
     with pytest.raises(ArithmeticException, match="Decimal\\(38, 0\\)"):
         eng.sync_entity("VoteCast")
     assert table.current_version() == v0
+
+
+def test_sync_entity_null_in_not_null_column_raises_and_commits_nothing(
+    spark, tmp_path, world
+):
+    """A record missing a NOT NULL field is loud on the local-relation
+    path: the merge's control aggregate sees the null, and the table
+    keeps its version."""
+    world.extend(
+        synthetic_blocks(6, 1, fork_tag="a"),
+        {6: {"VoteCast": [{k: v for k, v in vote(9).items() if k != "reason"}]}},
+    )
+    eng = make_engine(spark, tmp_path, world)
+    eng.create_tables()
+    table = eng.catalog.table("VoteCast")
+    v0 = table.current_version()
+    with pytest.raises(ValueError, match="NOT NULL"):
+        eng.sync_entity("VoteCast")
+    assert table.current_version() == v0
